@@ -43,7 +43,11 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val parallelismFirst = sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true")
+    require(parallelismFirst == "true" || parallelismFirst == "false",
+      s"usage: SPARK_GRAFT_PARALLELISM_FIRST must be true or false, got '$parallelismFirst'")
     val spark = SparkSession.builder()
+      .withExtensions(graft.core.GraftSession.extensions)
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
@@ -55,7 +59,7 @@ object Bench {
       // exists ONLY to reproduce that A/B on one binary; the driver
       // never sets it, so driver runs measure the engine as shipped.
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
+        parallelismFirst)
       // nanos-generation parquet readable (set at build, never per-call)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // janino class cache sized for multi-statement queries

@@ -1290,32 +1290,30 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
           min = mins.result(), max = maxs.result()))
       } finally reader.close()
     }
-    // footer IO parallelized on a small driver pool (guide §1.2): each
-    // statsOf is an independent open + footer read (~ms local, tens of
-    // ms on an object store) and the serial loop was the largest single
-    // identifiable driver-side cost of a MERGE commit (DriverProfile,
-    // round 17). Results keep `files` order; any Unprovable/IO failure
-    // surfaces on this thread and falls back to the Spark job exactly
-    // as the serial form did.
+    // footer IO parallelized on the shared driver pool (guide §1.2):
+    // each statsOf is an independent open + footer read (~ms local, tens
+    // of ms on an object store) and the serial loop was the largest
+    // single identifiable driver-side cost of a MERGE commit
+    // (DriverProfile, round 17). Results keep `files` order. An
+    // Unprovable or any other non-fatal failure falls back to the Spark
+    // job exactly as the serial form did; a fatal error (OOM, linkage,
+    // interrupt) is unwrapped from the pool's ExecutionException and
+    // rethrown, never turned into a silent fallback.
     try {
       if (files.sizeIs <= 1) Some(files.flatMap(statsOf))
       else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(8, files.size))
-        val tries =
-          try {
-            val futs = files.map { f =>
-              pool.submit(new java.util.concurrent.Callable[
-                scala.util.Try[Option[FileStats]]] {
-                def call(): scala.util.Try[Option[FileStats]] =
-                  scala.util.Try(statsOf(f))
-              })
-            }
-            futs.map(_.get())
-          } finally pool.shutdown()
-        Some(tries.flatMap(_.get))
+        val futs = files.map(f => SnapshotCatalog.FooterPool.submit(
+          new java.util.concurrent.Callable[Option[FileStats]] {
+            def call(): Option[FileStats] = statsOf(f)
+          }))
+        try Some(futs.flatMap(_.get()))
+        catch {
+          case e: java.util.concurrent.ExecutionException =>
+            futs.foreach(_.cancel(false))
+            throw Option(e.getCause).getOrElse(e)
+        }
       }
-    } catch { case _: Unprovable | scala.util.control.NonFatal(_) => None }
+    } catch { case scala.util.control.NonFatal(_) => None }
   }
 
   private def collectFileStats(schema: StructType,
@@ -4759,6 +4757,17 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
 object SnapshotCatalog {
 
   private val Log = org.slf4j.LoggerFactory.getLogger(classOf[SnapshotCatalog])
+
+  /** The driver pool footer-stats reads share across commits and
+    * catalogs: daemon threads, so it never holds a JVM open, and built
+    * once, not per commit (a streaming sink commits every trigger).
+    */
+  private lazy val FooterPool: java.util.concurrent.ExecutorService =
+    java.util.concurrent.Executors.newFixedThreadPool(8, { (r: Runnable) =>
+      val t = new Thread(r, "graft-footer-stats")
+      t.setDaemon(true)
+      t
+    })
 
   /** Optimistic-concurrency commit retries before giving up. */
   val MaxCommitRetries = 10

@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 
 /** SparkSession factory for the engine.
   *
@@ -39,9 +39,18 @@ object GraftSession {
     graft.functions.expressions.CurationSql.register(spark)
   }
 
+  /** Session extensions every engine session is built with (here, in
+    * `Bench`, `Verify` and the test base): [[graft.plans.ParamLiterals]],
+    * so a repeated query shape reuses its compiled classes whatever
+    * values its filters compare against.
+    */
+  val extensions: SparkSessionExtensions => Unit =
+    _.injectColumnar(_ => graft.plans.ParamLiterals.columnarRule)
+
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession
       .builder()
+      .withExtensions(extensions)
       .master(master)
       .appName("graft")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)

@@ -11,10 +11,15 @@ import graft.catalog.SnapshotCatalog
   * Scala APIs with identical JSON envelopes (SURVEY §2.2 R6-R11, §3.1,
   * §3.2) — JSON-string in/out so an HTTP layer is a trivial wrapper.
   *
-  * Divergence note (SURVEY §2.2 R4/R5): limits are pushed into the
-  * plan (`df.limit` → CollectLimitExec) instead of the reference's
-  * materialize-then-truncate, and the PyIceberg path's declared-but-
-  * disabled limit is ENFORCED — declared semantics, not the bug.
+  * Divergence note (SURVEY §2.2 R4/R5): the row cap is part of the
+  * plan instead of the reference's materialize-then-truncate, and the
+  * PyIceberg path's declared-but-disabled limit is ENFORCED — declared
+  * semantics, not the bug. Rows are rendered by a projection below the
+  * cap ([[Engine.wireRows]]), so a served request plans as
+  * `CollectLimitExec` at the root over the scan and its filter, with no
+  * exchange (`TakeOrderedAndProjectExec` when the SQL orders its rows);
+  * the filter's primitive constants are [[graft.plans.ParamLiteral]]s,
+  * so requests of one shape share their compiled code (ServingPlanSpec).
   *
   * ==Serving hygiene (long-lived Engine behind [[HttpApi]])==
   * Every query-executing entry point runs inside [[scopedRelease]]
@@ -2514,7 +2519,7 @@ class Engine(val spark: SparkSession, val catalog: SnapshotCatalog,
   def health(): String = """{"status":"healthy"}"""
 
   private def recordsJson(d: DataFrame): Try[String] =
-    Try(epochMillisTimestamps(d).toJSON.collect())
+    Try(wireRows(d).collect())
       .map(rows => s"""{"records":[${rows.mkString(",")}]}""")
 
   private def envelope(df: Try[DataFrame]): String =
@@ -2522,28 +2527,64 @@ class Engine(val spark: SparkSession, val catalog: SnapshotCatalog,
       case Success(json) => json
       case Failure(e) => errorJson(e)
     }
-
-  /** JSON fidelity (SURVEY §7.4 risk 3): the reference's DuckDB path
-    * renders timestamps as epoch MILLISECONDS (pandas
-    * `to_json(orient='records')` default, duckdb_rest_server.py:81-82);
-    * Spark's toJSON renders ISO strings. Convert top-level timestamp
-    * columns to epoch millis so the wire format matches.
-    */
-  private def epochMillisTimestamps(d: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.{col, unix_millis}
-    import org.apache.spark.sql.types.{TimestampType, TimestampNTZType}
-    val cols = d.schema.fields.map {
-      case f if f.dataType == TimestampType =>
-        unix_millis(col(f.name)).as(f.name)
-      case f if f.dataType == TimestampNTZType =>
-        unix_millis(col(f.name).cast(TimestampType)).as(f.name)
-      case f => col(f.name)
-    }
-    d.select(cols.toSeq: _*)
-  }
 }
 
 object Engine {
+
+  /** Each row of `d` as the JSON object the records envelope carries.
+    *
+    * A `to_json(struct(...))` projection rather than `Dataset.toJSON`:
+    * the projection is an ordinary `Project`, so Catalyst lifts every
+    * caller's `limit(n)` above it to the plan root, where it plans as
+    * `CollectLimitExec` (`TakeOrderedAndProjectExec` under ORDER BY).
+    * `toJSON`'s object map pins the limit below it, which plans as a
+    * `GlobalLimit` over a single-partition shuffle: an extra job, and a
+    * limit operator whose generated code differs on every request.
+    *
+    * Wire format, byte-identical to the former `toJSON` rendering:
+    *  - JSON fidelity (SURVEY §7.4 risk 3): the reference's DuckDB path
+    *    renders timestamps as epoch MILLISECONDS (pandas
+    *    `to_json(orient='records')` default, duckdb_rest_server.py:81-82),
+    *    so top-level timestamp columns are converted to epoch millis;
+    *  - intervals render with all their fields (`DAY TO SECOND`,
+    *    `YEAR TO MONTH`) whatever the column declares, as `toJSON` did;
+    *  - columns are addressed by position, so duplicate and dotted
+    *    column names come through unchanged.
+    */
+  private[graft] def wireRows(d: DataFrame): org.apache.spark.sql.Dataset[String] = {
+    import org.apache.spark.sql.Encoders
+    import org.apache.spark.sql.functions.{col, struct, to_json, unix_millis}
+    import org.apache.spark.sql.types.{TimestampType, TimestampNTZType}
+    val byPosition = d.columns.indices.map(i => s"_c$i")
+    val fields = d.schema.fields.zip(byPosition).map { case (f, p) =>
+      val c = col(p)
+      val wire = f.dataType match {
+        case TimestampType => unix_millis(c)
+        case TimestampNTZType => unix_millis(c.cast(TimestampType))
+        case dt =>
+          val wide = widenIntervals(dt)
+          if (wide == dt) c else c.cast(wide)
+      }
+      wire.as(f.name)
+    }
+    d.toDF(byPosition: _*).select(to_json(struct(fields.toSeq: _*)))
+      .as(Encoders.STRING)
+  }
+
+  /** `dt` with every interval type, at any depth, widened to its full
+    * field range. */
+  private def widenIntervals(dt: org.apache.spark.sql.types.DataType)
+      : org.apache.spark.sql.types.DataType = {
+    import org.apache.spark.sql.types._
+    dt match {
+      case _: DayTimeIntervalType => DayTimeIntervalType()
+      case _: YearMonthIntervalType => YearMonthIntervalType()
+      case ArrayType(e, n) => ArrayType(widenIntervals(e), n)
+      case MapType(k, v, n) => MapType(widenIntervals(k), widenIntervals(v), n)
+      case StructType(fs) => StructType(fs.map(f => f.copy(dataType = widenIntervals(f.dataType))))
+      case other => other
+    }
+  }
 
   /** Dev-only per-statement wall timing on stderr (the driver never
     * sets it): `GRAFT_SQL_TIMING=1` — the guide-§1 loop for the DML

@@ -7,6 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkTestBase extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
+    .withExtensions(graft.core.GraftSession.extensions)
     .master("local[4]")
     .appName("graft-test")
     .config("spark.sql.shuffle.partitions", "4")
